@@ -25,8 +25,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType
 
 from . import urls
 
@@ -39,7 +39,7 @@ UNLIMITED_BUDGET = 1_000_000  # hosts with no politeness delay
 # ---------------------------------------------------------------------------
 
 
-@pandas_udf(BooleanType())
+@pandas_udf(T.BooleanType())
 def robots_allowed_udf(url: pd.Series, robots_txt: pd.Series) -> pd.Series:
     """True iff robots.txt allows '*' to fetch url.  Null robots -> allow.
 
@@ -94,38 +94,84 @@ def gate_robots(
 # ---------------------------------------------------------------------------
 
 
+#: per-authority politeness delay dim (:func:`authority_delays`)
+AUTHORITY_DELAYS = T.StructType(
+    [
+        T.StructField("authority", T.StringType(), False),
+        T.StructField("delay_s", T.DoubleType(), True),
+    ]
+)
+
+
+def authority_delays(seeds: DataFrame) -> DataFrame:
+    """(authority, delay_s): the politeness delay is an authority
+    property in the seeds table (FIXTURES.md §2), max over its seeds."""
+    return seeds.groupBy("authority").agg(
+        F.max("politeness_delay_s").alias("delay_s")
+    )
+
+
+def _with_salts(per_host: DataFrame, salt_rows_target: int) -> DataFrame:
+    """(host, n_pending, budget) -> + (n_salts, salt_budget).
+
+    ``S = clamp(ceil(n/target), 1, min(MAX_SALTS, budget))`` — S never
+    exceeds the budget so the per-salt budget ``budget // S`` keeps host
+    totals <= budget."""
+    n_salts = F.least(
+        F.greatest(
+            F.ceil(F.col("n_pending") / F.lit(salt_rows_target)).cast("int"),
+            F.lit(1),
+        ),
+        F.least(F.lit(MAX_SALTS), F.col("budget")),
+    )
+    return per_host.withColumn("n_salts", n_salts).withColumn(
+        "salt_budget", F.floor(F.col("budget") / F.col("n_salts")).cast("int")
+    )
+
+
+def schedule_plan(
+    pending: DataFrame,
+    delays: DataFrame,
+    round_seconds: float = 60.0,
+    salt_rows_target: int = 50_000,
+) -> DataFrame:
+    """Per-host plan (host, n_pending, budget, n_salts, salt_budget) in
+    ONE aggregation over pending joined to the (broadcast) delay dim.
+
+    Token budget for one round: ``round_seconds / delay``, bounded by
+    the *strictest* authority fetching from the host (max delay over
+    its pending rows).  No delay (null, or <= 0: an authority missing
+    from seeds or one without a politeness delay) -> UNLIMITED_BUDGET.
+    """
+    per_host = (
+        pending.select("host", "authority")
+        .join(F.broadcast(delays), "authority", "left")
+        .groupBy("host")
+        .agg(
+            F.count("*").alias("n_pending"),
+            F.max("delay_s").alias("delay_s"),
+        )
+    )
+    delay = F.col("delay_s")
+    budget = F.when(
+        delay.isNull() | (delay <= 0.0), F.lit(UNLIMITED_BUDGET)
+    ).otherwise(
+        F.greatest(F.lit(1), F.floor(F.lit(round_seconds) / delay).cast("int"))
+    )
+    return _with_salts(
+        per_host.select("host", "n_pending", budget.alias("budget")),
+        salt_rows_target,
+    )
+
+
 def host_budgets(
     pending: DataFrame, seeds: DataFrame, round_seconds: float = 60.0
 ) -> DataFrame:
-    """Per-host token budget for one round: round_seconds / delay.
-
-    The politeness delay is an authority property in the seeds table
-    (FIXTURES.md §2); a host's budget is bounded by the *strictest*
-    authority that fetches from it (min over authorities -> max delay).
-    """
-    delays = seeds.groupBy("authority").agg(
-        F.max("politeness_delay_s").alias("delay_s")
-    )
-    return (
-        pending.select("host", "authority")
-        .distinct()
-        .join(F.broadcast(delays), "authority", "left")
-        .groupBy("host")
-        .agg(F.max("delay_s").alias("delay_s"))
-        .select(
-            "host",
-            F.when(
-                F.col("delay_s").isNull() | (F.col("delay_s") <= 0.0),
-                F.lit(UNLIMITED_BUDGET),
-            )
-            .otherwise(
-                F.greatest(
-                    F.lit(1),
-                    F.floor(F.lit(round_seconds) / F.col("delay_s")).cast("int"),
-                )
-            )
-            .alias("budget"),
-        )
+    """Per-host token budget for one round (host, budget) — the budget
+    column of :func:`schedule_plan`, for callers that schedule with an
+    explicit budgets frame."""
+    return schedule_plan(pending, authority_delays(seeds), round_seconds).select(
+        "host", "budget"
     )
 
 
@@ -134,32 +180,16 @@ def salt_plan(
     budgets: DataFrame,
     salt_rows_target: int = 50_000,
 ) -> DataFrame:
-    """Per-host salt plan: (host, n_pending, budget, n_salts, salt_budget).
-
-    ``S = clamp(ceil(n/target), 1, min(MAX_SALTS, budget))`` — S never
-    exceeds the budget so the per-salt budget ``budget // S`` keeps host
-    totals <= budget.  A cheap two-column map-side partial aggregation
-    over pending.
-    """
+    """Per-host salt plan (host, n_pending, budget, n_salts, salt_budget)
+    from an explicit (host, budget) frame; hosts missing from it are
+    unlimited.  A cheap two-column map-side partial aggregation over
+    pending."""
     counts = pending.groupBy("host").agg(F.count("*").alias("n_pending"))
-    return (
+    return _with_salts(
         counts.join(F.broadcast(budgets), "host", "left")
         .na.fill({"budget": UNLIMITED_BUDGET})
-        .select(
-            "host",
-            "n_pending",
-            "budget",
-            F.least(
-                F.greatest(
-                    F.ceil(F.col("n_pending") / F.lit(salt_rows_target)).cast("int"),
-                    F.lit(1),
-                ),
-                F.least(F.lit(MAX_SALTS), F.col("budget")),
-            ).alias("n_salts"),
-        )
-        .withColumn(
-            "salt_budget", F.floor(F.col("budget") / F.col("n_salts")).cast("int")
-        )
+        .select("host", "n_pending", "budget"),
+        salt_rows_target,
     )
 
 
@@ -184,14 +214,16 @@ def budgets_bind(plan: DataFrame) -> bool:
 
 def salt_rows(
     pending: DataFrame,
-    budgets: DataFrame,
+    budgets: DataFrame | None,
     salt_rows_target: int = 50_000,
     plan: DataFrame | None = None,
 ) -> DataFrame:
     """Attach the salt plan to pending rows (stage 1+2 of scheduling):
     ``host_salt = host#pmod(url_hash, S)`` spreads a hot host over S
     shuffle partitions so the rank window never sees a whole hot host
-    in one reducer."""
+    in one reducer.  A given ``plan`` (e.g. a persisted
+    :func:`schedule_plan`) is used as is; else it is built from
+    ``budgets``."""
     if plan is None:
         plan = salt_plan(pending, budgets, salt_rows_target)
     return pending.join(F.broadcast(plan.drop("n_pending")), "host").withColumn(

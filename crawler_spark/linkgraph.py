@@ -241,7 +241,9 @@ def connected_components(
     execution of the round's joins.  With edges bucketed by src the
     label shuffle is the only exchange per round.
 
-    Output: (node, component) for every distinct endpoint.
+    Output: (node, component) for every distinct endpoint.  Raises
+    ``RuntimeError`` when a round still changes labels after
+    ``max_rounds`` — unconverged labels are never returned.
     """
     e = edges.select(
         F.col(src_col).cast("long").alias("u"),
@@ -292,6 +294,13 @@ def connected_components(
         labc = nxtc
         if changed == 0:
             break
+    else:
+        symc.release()
+        labc.release()
+        raise RuntimeError(
+            f"connected_components: labels still changing after "
+            f"max_rounds={max_rounds}"
+        )
     symc.release()
     # the final labels frame stays pinned (callers own its lifetime,
     # same convention as pagerank_fixedpoint's returned frame)

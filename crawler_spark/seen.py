@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .schema import SEEN_BLOOM
+from .tables import local_frame
 
 DEFAULT_SHARDS = 32
 DEFAULT_K = 7
@@ -130,7 +131,7 @@ def bloom_build(
     filter by rebuilding from the full hash set with a larger m_bits.
     """
     if prior_state is None:
-        prior_state = spark.createDataFrame([], SEEN_BLOOM)
+        prior_state = local_frame(spark, SEEN_BLOOM)
 
     hashed = new_hashes.select(
         shard_of(F.col("url_hash"), n_shards).alias("shard"),

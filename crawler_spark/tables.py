@@ -28,11 +28,32 @@ import os
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 _CURRENT = "CURRENT"
+
+
+def arrow_table(schema: T.StructType, rows=()) -> pa.Table:
+    """Driver-side rows (tuples in ``schema`` field order) as an Arrow
+    table carrying the declared field types."""
+    asch = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(asch)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, asch)], schema=asch
+    )
+
+
+def local_frame(spark: SparkSession, schema: T.StructType, rows=()) -> DataFrame:
+    """DataFrame over driver-side rows (or none), planned as a JVM
+    ``LocalRelation``.  ``createDataFrame`` on a list or an RDD plans a
+    Python RDD — one Python worker task per slice, even for zero rows —
+    while an Arrow table crosses to the JVM once and runs no Python task."""
+    return spark.createDataFrame(arrow_table(schema, rows), schema=schema)
 
 
 def _entry_path(e) -> str:
@@ -129,16 +150,14 @@ class SnapshotTable:
         df.select(*cols).write.mode("overwrite").parquet(os.path.join(self.root, part))
         return part
 
+    def _part_files(self, part: str) -> list[str]:
+        return sorted(glob.glob(os.path.join(self.root, part, "*.parquet")))
+
     def _part_rows(self, part: str) -> int:
         """Exact row count of a written part from the parquet footers —
         driver-side metadata reads, no Spark job (the manifest statistic
         Iceberg keeps natively)."""
-        import pyarrow.parquet as pq
-
-        return sum(
-            pq.read_metadata(f).num_rows
-            for f in glob.glob(os.path.join(self.root, part, "*.parquet"))
-        )
+        return sum(pq.read_metadata(f).num_rows for f in self._part_files(part))
 
     def _new_entry(self, part: str) -> dict:
         entry = {
@@ -170,8 +189,38 @@ class SnapshotTable:
             os.path.join(self.root, new_part)
         )
 
+    def append_rows(self, rows: list[tuple], note: str = "append") -> str:
+        """Append driver-side rows: pyarrow writes the part straight into
+        the table's data directory — no Spark job, no Python worker.  The
+        part is written without the embedded Arrow schema (Spark reads it
+        with the declared schema like any other) and without min/max
+        statistics: on a part of a few dozen rows they would make it
+        larger than the part Spark writes, and nothing prunes by them."""
+        part = os.path.join("data", uuid.uuid4().hex)
+        os.makedirs(os.path.join(self.root, part))
+        pq.write_table(
+            arrow_table(self.schema, rows),
+            os.path.join(self.root, part, "part-00000.parquet"),
+            store_schema=False,
+            write_statistics=False,
+        )
+        parts = list(self._current_parts())
+        parts.append(self._new_entry(part))
+        return self._commit(parts, note)
+
     def overwrite(self, df: DataFrame, note: str = "overwrite") -> str:
         return self._commit([self._new_entry(self._write_part(df))], note)
+
+    def rollback_to(self, snapshot_id: str | None, note: str) -> str:
+        """Make ``snapshot_id`` (None: the empty table) current again as a
+        new snapshot that lists the same parts — a manifest commit only,
+        no data read or written (Iceberg's ``rollback_to_snapshot``).
+        Merge-on-read visibility is unchanged: the re-listed parts keep
+        their sequence numbers, and later commits get higher ones."""
+        m = self._read_manifest(snapshot_id) if snapshot_id else {}
+        return self._commit(
+            m.get("parts", []), note, delete_parts=m.get("delete_parts", [])
+        )
 
     def adopt_part(self, src_dir: str, note: str, layout: str, **meta) -> str:
         """Commit an already-materialized parquet directory as a new part
@@ -205,12 +254,21 @@ class SnapshotTable:
         sid = self.current_snapshot_id()
         return self._read_manifest(sid)["parts"] if sid else []
 
+    def read_arrow(self) -> pa.Table:
+        """Driver-side pyarrow read of the latest snapshot's plain parts —
+        no Spark job.  For the small tables the driver writes itself
+        (:meth:`append_rows`); adopted parts are not mapped."""
+        files = [
+            f for p in self._current_parts() for f in self._part_files(_entry_path(p))
+        ]
+        return pq.read_table(files) if files else arrow_table(self.schema)
+
     def read(self, spark: SparkSession, snapshot_id: str | None = None) -> DataFrame:
         """Read latest snapshot, or time-travel to ``snapshot_id``."""
         sid = snapshot_id or self.current_snapshot_id()
         parts = self._read_manifest(sid)["parts"] if sid else []
         if not parts:
-            return spark.createDataFrame([], self.schema)
+            return local_frame(spark, self.schema)
         plain = [p for p in parts if not (isinstance(p, dict) and p.get("layout"))]
         adopted = [p for p in parts if isinstance(p, dict) and p.get("layout")]
         scans = []
@@ -307,7 +365,7 @@ class MorTable(SnapshotTable):
         self, spark: SparkSession, parts: list, delete_parts: list
     ) -> DataFrame:
         if not parts:
-            return spark.createDataFrame([], self.schema)
+            return local_frame(spark, self.schema)
         # fast path: every part stores its commit sequence number as a
         # column (written by commit_delta), so the whole table is ONE
         # multi-path parquet scan instead of an N-part union plan — the

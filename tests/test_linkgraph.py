@@ -4,6 +4,8 @@ determinism across reruns and partitionings, and cache hygiene."""
 
 from __future__ import annotations
 
+import pytest
+
 from crawler_spark import linkgraph
 
 
@@ -118,6 +120,17 @@ def test_components_transitive_chain_pointer_doubling(spark):
     out = linkgraph.connected_components(e, max_rounds=8).collect()
     assert {r["component"] for r in out} == {100}
     assert len(out) == 40
+
+
+def test_components_raise_when_max_rounds_runs_out(spark):
+    """The same 40-node path cannot converge in 3 rounds (labels reach
+    at most ~2^3 hops): the operator raises instead of returning
+    unconverged labels, and releases its checkpoint blocks."""
+    e = _ledges(spark, [(i, i + 1) for i in range(100, 139)])
+    before = linkgraph._pinned_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="max_rounds=3"):
+        linkgraph.connected_components(e, max_rounds=3)
+    assert linkgraph._pinned_rdd_ids(spark) == before
 
 
 def test_components_deterministic_across_partitionings(spark):

@@ -39,14 +39,31 @@ def _final_state(run):
     return docs, seen
 
 
+def _logs(run):
+    """(batch_id, url, status) multiset of fetch_log, and the metrics
+    rows without their wall-clock column."""
+    fetches = sorted(
+        tuple(r)
+        for r in run.fetch_log.read(run.spark)
+        .select("batch_id", "url", "status")
+        .collect()
+    )
+    metrics = sorted(
+        tuple(r) for r in run.metrics.read(run.spark).drop("wall_ms").collect()
+    )
+    return fetches, metrics
+
+
 def test_resume_after_partial_commit(spark, tmp_path):
     # uninterrupted reference run
     full = _mk(spark, str(tmp_path / "full"))
     full.run(max_rounds=50)
     want = _final_state(full)
+    want_logs = _logs(full)
 
     # interrupted run: 2 rounds, then a simulated crash mid-round-3 —
-    # documents got appended but lineage (the commit point) did not
+    # documents, fetch_log and metrics got appended but lineage (the
+    # commit point) did not
     part = _mk(spark, str(tmp_path / "part"))
     part.init()
     part.round(1)
@@ -55,6 +72,14 @@ def test_resume_after_partial_commit(spark, tmp_path):
         "doc_hash", F.lit("junk-partial-commit")
     )
     part.documents.append(junk, note="simulated-crash-partial")
+    part.fetch_log.append(
+        part.fetch_log.read(spark).withColumn("batch_id", F.lit(3).cast("long")),
+        note="simulated-crash-partial",
+    )
+    part.metrics.append(
+        part.metrics.read(spark).withColumn("round_id", F.lit(3).cast("long")),
+        note="simulated-crash-partial",
+    )
     assert (
         part.documents.read(spark)
         .filter(F.col("doc_hash") == "junk-partial-commit")
@@ -76,6 +101,8 @@ def test_resume_after_partial_commit(spark, tmp_path):
         if resumed.round(r) is None:
             break
     assert _final_state(resumed) == want
+    # fetch_log and metrics rows of the replayed round appear once
+    assert _logs(resumed) == want_logs
 
 
 def test_time_travel_reads(spark, tmp_path):
